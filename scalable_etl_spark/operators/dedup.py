@@ -58,6 +58,13 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "
 # ------------------------------------------------------- shingle common
 
 
+def _quoted(name: str) -> str:
+    """``name`` as one backtick-quoted identifier (embedded backticks
+    doubled), so a column named with a space, dot, reserved word or
+    backtick resolves as that one top-level column in F.col and SQL."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def shingle_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
 ) -> DataFrame:
@@ -67,7 +74,7 @@ def shingle_table(
     higher-order-function spelling evaluates interpreted and was the
     measured hot spot of every shingle-based dedup query."""
     return df.select(
-        F.col(id_col),
+        F.col(_quoted(id_col)),
         F.explode(word_shingles_text(text_col, k)).alias("shingle"),
     )
 
@@ -82,10 +89,11 @@ def shingle_hash_table(
     40-char shingle text, and sort keys compare in one instruction.
     The oracle computes the identical hash, so both engines agree even
     in the (2^-60) collision case."""
+    qid = F.col(_quoted(id_col))
     return df.select(
-        F.col(id_col),
+        qid,
         F.explode(word_shingles_text(text_col, k)).alias("shingle"),
-    ).select(id_col, portable_hash64(F.col("shingle")).alias("h"))
+    ).select(qid, portable_hash64(F.col("shingle")).alias("h"))
 
 
 # ------------------------------------------------- n-gram Jaccard (exact)
@@ -614,16 +622,18 @@ def _minhash_wide(
     # selectExpr with pre-rendered strings: one parsed expression per
     # permutation instead of ~10 py4j round-trips each (the JVM plan is
     # identical — mix_hash_spark_sql is the same op/constant sequence).
-    # id_col is backtick-quoted: a name needing quoting (space, dot,
-    # reserved word) must parse exactly as F.col(id_col) resolved it.
+    # id_col is quoted the same way in the projection and the grouping,
+    # so a name needing quoting (space, dot, reserved word, backtick)
+    # resolves to the one top-level column in both.
+    qid = _quoted(id_col)
     hashed = sh.selectExpr(
-        f"`{id_col}`",
+        qid,
         *[
             f"({mix_hash_spark_sql('h', p)}) AS h{p}"
             for p in range(num_perms)
         ],
     )
-    return hashed.groupBy(id_col).agg(
+    return hashed.groupBy(F.col(qid)).agg(
         *[F.min(f"h{p}").alias(f"h{p}") for p in range(num_perms)]
     )
 
@@ -642,7 +652,7 @@ def minhash_signatures(
     one-shuffle aggregation shape."""
     wide = _minhash_wide(df, num_perms, text_col, id_col, k)
     return wide.select(
-        F.col(id_col),
+        F.col(_quoted(id_col)),
         F.posexplode(
             F.array(*[F.col(f"h{p}") for p in range(num_perms)])
         ).alias("perm", "min_hash"),
@@ -690,7 +700,7 @@ def minhash_band_table(
         for band in range(bands)
     ]
     return wide.selectExpr(
-        f"`{id_col}`",
+        _quoted(id_col),
         "posexplode(array("
         + ", ".join(band_buckets)
         + ")) AS (band, bucket)",

@@ -1462,7 +1462,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    n_docs = d.count()
+    # corpus size as a scalar subquery over a one-row aggregate (the
+    # oracle's ``n`` CTE), not an eager count: building the plan runs no
+    # job, and no nested-loop join carries the one value
+    n_docs = d.agg(F.count(F.lit(1))).scalar()
     tf = (
         d.select("doc_id", F.explode(tokens("text")).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -1478,7 +1481,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("tf")
                 * (
                     F.log(
-                        (F.lit(float(n_docs)) + 1.0) / (F.col("dfr") + 1.0)
+                        (n_docs + 1.0) / (F.col("dfr") + 1.0)
                     )
                     + 1.0
                 ),

@@ -10,6 +10,20 @@ Design notes (scale-first):
 - ``spark.sql.legacy.parquet.nanosAsLong`` because the driver testdata
   writes parquet TIMESTAMP(NANOS) which Spark refuses by default; the
   loader converts the raw nanos to proper TimestampType (see tables.py).
+- PySpark 4's DataFrame call-site capture is off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``Column`` method call and ``F.col`` also runs
+  ``getActiveSession``, a conf get and an origin set/clear over py4j —
+  about half of all round trips while a query plan is built. Spark
+  documents the capture as a debugging aid with non-trivial overhead;
+  all it adds is the Python call site to analysis error messages. The
+  conf is static, so ``get_spark`` sets it on the builder
+  (``BUILDER_CONF``) and a session built elsewhere keeps its own value.
+  PySpark reads the flag once per process, at the first Column call,
+  and caches it. To debug with it, set
+  ``BUILDER_CONF["spark.python.sql.dataFrameDebugging.enabled"] =
+  "true"`` before ``get_spark`` builds the session, ahead of the
+  process's first DataFrame call.
 """
 
 from __future__ import annotations
@@ -29,6 +43,9 @@ BUILDER_CONF: dict[str, str] = {
     "spark.sql.warehouse.dir": os.environ.get(
         "SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"
     ),
+    # No per-call Python call-site capture (module docstring). A static
+    # conf: a live session refuses to change it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Conf that is safe to (re)apply on a live session — used both for our

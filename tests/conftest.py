@@ -9,9 +9,10 @@ test session, never the product defaults in session.py):
   is per-task/per-file overhead, not compute — 32 task slots means a
   32-partition frame per createDataFrame and up to 32 files per table
   write. Measured 1.5x faster suite at local[4], flat from local[2].
-- temp IO on /dev/shm: every ACID test writes dozens of tiny parquet
-  commits through tempfile.mkdtemp; tmpfs removes the disk round trip
-  (and SPARK_LOCAL_DIRS keeps shuffle spill there too).
+- temp IO on /dev/shm where the host has it: every ACID test writes
+  dozens of tiny parquet commits through tempfile.mkdtemp; tmpfs
+  removes the disk round trip (and SPARK_LOCAL_DIRS keeps shuffle
+  spill there too).
 - file-output committer v2 without _SUCCESS markers: one fewer rename
   pass and one fewer file per tiny write (~20% per write). Nothing
   reads _SUCCESS (queries_sources globs *.parquet; vacuum sweeps
@@ -25,13 +26,17 @@ import tempfile
 
 import pytest
 
-os.makedirs("/dev/shm/sg_tests", exist_ok=True)
-tempfile.tempdir = "/dev/shm/sg_tests"
-os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/sg_tests")
-# Cap the test session's cores BEFORE session.py reads the env. The
-# driver exports SPARK_GRAFT_CPUS for the BENCH contract; the test
-# suite is overhead-bound, so it pins its own small master regardless
-# (no test asserts on the ambient core count).
+# Hosts without a writable /dev/shm (macOS, some containers) keep the
+# default tempdir.
+if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+    os.makedirs("/dev/shm/sg_tests", exist_ok=True)
+    tempfile.tempdir = "/dev/shm/sg_tests"
+    os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/sg_tests")
+# Cap the test session's cores BEFORE session.py reads the env. This
+# overrides any SPARK_GRAFT_CPUS the caller exported, on purpose: the
+# suite is overhead-bound and its run time was sized at local[4], so it
+# pins its own small master regardless (no test asserts on the ambient
+# core count).
 os.environ["SPARK_GRAFT_CPUS"] = "4"
 
 from scalable_etl_spark.session import get_spark

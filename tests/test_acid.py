@@ -238,6 +238,33 @@ def test_merge_prunes_untouched_dirs_via_stats(spark, tmp_path):
     assert rows == expect
 
 
+def test_merge_pins_nondeterministic_source(spark, tmp_path):
+    """A source whose second evaluation differs from its first (a
+    nondeterministic UDF over a counter file: key 5 on its first call,
+    105 after) is evaluated once: the key-range pruning and the rewrite
+    both see key 5, so no key ends up in two dirs."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.overwrite(_df(spark, [(i, "lo") for i in range(0, 10)]),
+                stats_cols=["k"])
+    t.append(_df(spark, [(i, "mid") for i in range(100, 110)]),
+             stats_cols=["k"])
+    counter = str(tmp_path / "calls")
+    open(counter, "w").close()
+
+    def drifting_key(_):
+        with open(counter, "a+") as f:
+            f.seek(0)
+            calls = len(f.read())
+            f.write("x")
+        return 5 if calls == 0 else 105
+
+    key = F.udf(drifting_key, "int").asNondeterministic()
+    t.merge(_df(spark, [(0, "UPD")]).select(key("k").alias("k"), "v"), ["k"])
+    rows = [(r.k, r.v) for r in t.read().collect()]
+    assert len(rows) == len({k for k, _ in rows}), "duplicate keys"
+    assert (5, "UPD") in rows and (105, "mid") in rows
+
+
 def test_data_skipping_prunes_dirs(spark, tmp_path):
     """Three appends with disjoint key ranges + stats -> a ranged read
     must plan only the matching dir (dir-level data skipping), while

@@ -12,7 +12,9 @@ from pyspark.sql import functions as F
 from scalable_etl_spark.operators.dedup import (
     drop_exact_duplicates,
     exact_dedup_groups,
+    minhash_band_table,
     minhash_lsh_pairs,
+    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_near_pairs,
 )
@@ -77,6 +79,20 @@ def test_minhash_lsh_matches_exact_on_candidates(spark, docs):
 def test_minhash_rejects_bad_band_split(spark, docs):
     with pytest.raises(ValueError):
         minhash_lsh_pairs(docs, num_perms=10, bands=4)
+
+
+@pytest.mark.parametrize("id_col", ["doc id", "doc`id", "doc.id"])
+def test_minhash_quotes_id_col(spark, docs, id_col):
+    """An id column whose name needs quoting (space, backtick, dot)
+    signs and bands exactly like ``doc_id``."""
+    want_sig = {tuple(r) for r in minhash_signatures(docs).collect()}
+    want_band = {tuple(r) for r in minhash_band_table(docs).collect()}
+    odd = docs.withColumnRenamed("doc_id", id_col)
+    sig = minhash_signatures(odd, id_col=id_col)
+    band = minhash_band_table(odd, id_col=id_col)
+    assert sig.columns[0] == band.columns[0] == id_col
+    assert {tuple(r) for r in sig.collect()} == want_sig
+    assert {tuple(r) for r in band.collect()} == want_band
 
 
 def test_simhash_near_pairs_close_docs(spark):
