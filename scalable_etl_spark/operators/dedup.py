@@ -30,6 +30,7 @@ from ..functions.text import (
     tokens,
     word_shingles_text,
 )
+from ..tables import quote_ident
 
 # ---------------------------------------------------------------- exact
 
@@ -58,13 +59,6 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "
 # ------------------------------------------------------- shingle common
 
 
-def _quoted(name: str) -> str:
-    """``name`` as one backtick-quoted identifier (embedded backticks
-    doubled), so a column named with a space, dot, reserved word or
-    backtick resolves as that one top-level column in F.col and SQL."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def shingle_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
 ) -> DataFrame:
@@ -74,7 +68,7 @@ def shingle_table(
     higher-order-function spelling evaluates interpreted and was the
     measured hot spot of every shingle-based dedup query."""
     return df.select(
-        F.col(_quoted(id_col)),
+        F.col(quote_ident(id_col)),
         F.explode(word_shingles_text(text_col, k)).alias("shingle"),
     )
 
@@ -89,7 +83,7 @@ def shingle_hash_table(
     40-char shingle text, and sort keys compare in one instruction.
     The oracle computes the identical hash, so both engines agree even
     in the (2^-60) collision case."""
-    qid = F.col(_quoted(id_col))
+    qid = F.col(quote_ident(id_col))
     return df.select(
         qid,
         F.explode(word_shingles_text(text_col, k)).alias("shingle"),
@@ -625,7 +619,7 @@ def _minhash_wide(
     # id_col is quoted the same way in the projection and the grouping,
     # so a name needing quoting (space, dot, reserved word, backtick)
     # resolves to the one top-level column in both.
-    qid = _quoted(id_col)
+    qid = quote_ident(id_col)
     hashed = sh.selectExpr(
         qid,
         *[
@@ -652,7 +646,7 @@ def minhash_signatures(
     one-shuffle aggregation shape."""
     wide = _minhash_wide(df, num_perms, text_col, id_col, k)
     return wide.select(
-        F.col(_quoted(id_col)),
+        F.col(quote_ident(id_col)),
         F.posexplode(
             F.array(*[F.col(f"h{p}") for p in range(num_perms)])
         ).alias("perm", "min_hash"),
@@ -700,7 +694,7 @@ def minhash_band_table(
         for band in range(bands)
     ]
     return wide.selectExpr(
-        _quoted(id_col),
+        quote_ident(id_col),
         "posexplode(array("
         + ", ".join(band_buckets)
         + ")) AS (band, bucket)",

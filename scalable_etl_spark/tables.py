@@ -56,6 +56,13 @@ _SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
 _TUNED: weakref.WeakSet = weakref.WeakSet()
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as one backtick-quoted identifier (embedded backticks
+    doubled), so a column named with a space, dot, reserved word or
+    backtick resolves as that one top-level column in F.col and SQL."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _stamp(path: str) -> tuple[int, int] | None:
     """(size, mtime_ns) of a local regular file, else None."""
     try:
@@ -98,7 +105,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos = _TS_NANOS_COLS.get(name, ())
     fixed: dict[str, str] = {}
     for f in schema.fields:
-        c = f"`{f.name.replace('`', '``')}`"
+        c = quote_ident(f.name)
         if isinstance(f.dataType, TimestampNTZType):
             fixed[f.name] = f"CAST({c} AS TIMESTAMP)"
         elif f.name in nanos and isinstance(f.dataType, LongType):
@@ -112,12 +119,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     if not fixed:
         return df
-    # one projection that keeps column order, not a withColumn loop;
-    # for the usual single column withColumn is that projection in 10
-    # fewer round trips than withColumns
-    if len(fixed) == 1:
-        ((c, e),) = fixed.items()
-        return df.withColumn(c, F.expr(e))
+    # one projection that keeps column order, not a withColumn loop
     return df.withColumns({c: F.expr(e) for c, e in fixed.items()})
 
 
