@@ -46,6 +46,10 @@ correctness:  ## every registered query vs its DuckDB oracle, sf0.01
 bench:  ## one JSON line of per-query wall seconds at $(SF_DIR)
 	SPARK_GRAFT_SF_DIR=$(SF_DIR) python bench.py
 
+trace:  ## traced perfbench runs, seed 1: per-layer counters in .bench_runs/trace-*.json
+	python3 perfbench/run.py --workload lakehouse_dml --seed 1 --seconds 10 --trace 1
+	python3 perfbench/run.py --workload query_corpus --seed 1 --seconds 10 --trace 1
+
 plans:  ## refresh PLANS.md (formatted explain of the headline queries)
 	python tools/dump_plans.py
 
@@ -56,4 +60,4 @@ clean:
 	@echo ">>> Cleaned the local warehouse"
 
 .PHONY: seed ingest ingest-stream transform daily report jobs pipeline \
-        test correctness bench plans clean
+        test correctness bench trace plans clean

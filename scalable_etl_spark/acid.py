@@ -531,6 +531,17 @@ class SnapshotTable:
         root: str,
         parquet_checkpoints: bool | None = None,
     ):
+        # every file operation here (os.walk / listdir / makedirs,
+        # pyarrow footer and sidecar reads, the os.link commit) needs a
+        # local POSIX path: under s3a:// or hdfs:// the deletion-vector
+        # readback finds no files and a delete silently commits
+        # nothing, and a file: URI becomes a relative ./file: dir
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", os.fspath(root)):
+            raise ValueError(
+                f"SnapshotTable needs a local filesystem path, got "
+                f"{root!r} (drop a file: scheme; object-store and "
+                f"HDFS roots are not supported)"
+            )
         self.spark = spark
         self.root = root
         self.log_dir = os.path.join(root, "_log")
@@ -1267,6 +1278,9 @@ class SnapshotTable:
     ) -> DataFrame:
         """Snapshot read; ``version`` pins a historical snapshot (time
         travel). The returned plan references only immutable dirs.
+        ``read()`` only plans: it prunes entries and files, then
+        builds the scan with :meth:`_read_dirs` (the one snapshot-scan
+        builder) and applies the ``where`` predicates as filters.
 
         ``with_row_ids=True`` (requires :meth:`enable_row_tracking`)
         appends the STABLE ``_row_id`` column: derived as
@@ -1399,7 +1413,6 @@ class SnapshotTable:
                 "_row_id predicates require with_row_ids=True"
             )
         m_rb = None
-        mat_set: set = set()
         if with_row_ids:
             # the distributed-plan manifest-lite omits row_bases (it
             # never ships O(file) maps to the driver); the base map is
@@ -1417,9 +1430,6 @@ class SnapshotTable:
                     "row tracking is not enabled at this version; "
                     "call enable_row_tracking() first"
                 )
-            mat_set = set(m_rb.get("row_mat", []))
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        evo_ctx = self._evolution_ctx(m)
         dirs = m["dirs"]
         # each predicate prunes independently; survivors intersect.
         # Every predicate normalizes to a list of ALTERNATIVES — one
@@ -1451,45 +1461,27 @@ class SnapshotTable:
         rid_files: dict[str, set] = {}
         if rid_preds:
             dirs, rid_files = self._rid_prune(m_rb, dirs, rid_preds)
-        dvm = m.get("dv", {})
         all_fstats = m.get("file_stats", {})
-        # POINT lookups additionally probe per-file bloom filters when
-        # present (see _normalize_predicate): min/max ranges on a
-        # high-cardinality key overlap across every file, but the
-        # bloom excludes the files that cannot hold the value (false
-        # positives only keep extras). Partition columns never hold
-        # blooms (values live in paths, not files) and must never be
-        # probed: a stray all-zero spec would falsely prune every file.
-        parts = []
-        dv_parts: list[tuple[DataFrame, str]] = []
-        dv_prefix = (
-            self._dv_scan_prefix(m, required=True)
-            if any(dvm.get(d) for d in dirs)
-            else None
-        )
+        # surviving files per entry; an entry absent from ``subsets``
+        # survives whole and scans dir-level (cheaper listing than
+        # enumerating every path). POINT lookups additionally probe
+        # per-file bloom filters when present (see
+        # _normalize_predicate): min/max ranges on a high-cardinality
+        # key overlap across every file, but the bloom excludes the
+        # files that cannot hold the value. Partition columns never
+        # hold blooms (values live in paths) and are never probed.
+        scan_dirs: list[str] = []
+        subsets: dict[str, list[str]] = {}
         for d in dirs:
-            base = os.path.join(self.data_dir, d)
             if dplan is not None:
                 # distributed planning already evaluated per-file
                 # survival in executors; entries absent from the plan
-                # carry no file stats -> conservative whole-dir scan
-                got = dplan.get(d)
-                if got is None:
-                    paths = [base]
-                else:
-                    total, files = got
-                    # files=None: every file survived — the plan job
-                    # dropped the name list executor-side; one
-                    # dir-level scan (cheaper listing than
-                    # enumerating every path)
-                    if files is None:
-                        paths = [base]
-                    elif not files:
-                        continue
-                    else:
-                        paths = [os.path.join(base, f) for f in files]
+                # carry no file stats, and files=None means every file
+                # survived (the plan job dropped the name list)
+                files = dplan.get(d, (0, None))[1]
             else:
                 fstats = all_fstats.get(d)
+                files = None
                 if fstats and active:
                     files = [
                         f
@@ -1502,110 +1494,30 @@ class SnapshotTable:
                             for alts in active
                         )
                     ]
-                    if not files:
-                        continue
-                    # whole dir survives -> one dir-level scan (cheaper
-                    # listing than enumerating every path)
                     if len(files) == len(fstats):
-                        paths = [base]
-                    else:
-                        paths = [os.path.join(base, f) for f in files]
-                else:
-                    paths = [base]
+                        files = None
             allowed = rid_files.get(d)
             if allowed is not None:
                 # id-range pruning composes with stats/dplan pruning:
                 # intersect the surviving file set
-                if paths == [base]:
-                    paths = [
-                        os.path.join(base, f) for f in sorted(allowed)
-                    ]
-                else:
-                    paths = [
-                        p
-                        for p in paths
-                        if os.path.relpath(p, base) in allowed
-                    ]
-                    if not paths:
-                        continue
-            pschema = self._physical_schema(schema, evo_ctx, d)
-            if with_row_ids and d in mat_set:
-                # materialized entries carry the physical _row_id
-                # column; declare it so the scan reads it (normal
-                # reads never declare it, so it costs them nothing)
-                pschema = StructType(
-                    [*pschema.fields, StructField(_ROW_ID, LongType())]
+                files = (
+                    sorted(allowed)
+                    if files is None
+                    else [f for f in files if f in allowed]
                 )
-            scan = (
-                # per-entry physical schema: identical to the logical
-                # schema except for entries predating a rename (see
-                # _physical_schema / ALTER TABLE)
-                self.spark.read.schema(pschema)
-                # basePath = the entry's COMMIT root, so hive partition
-                # components inside the entry path parse into columns
-                .option(
-                    "basePath",
-                    os.path.join(self.data_dir, self._entry_base(d)),
-                )
-                .parquet(*paths)
-            )
-            if with_row_ids:
-                # every entry is meta-tagged: (file, pos) feeds both
-                # DV suppression and the row-id derivation join
-                scan = self._with_dv_meta(scan)
-                scan = (
-                    scan.withColumnRenamed(_ROW_ID, _ROW_ID_PHYS)
-                    if d in mat_set
-                    else scan.withColumn(
-                        _ROW_ID_PHYS, F.lit(None).cast("bigint")
-                    )
-                )
-                dv_parts.append(
-                    (self._apply_evolution(scan, evo_ctx, d), d)
-                )
-            elif dvm.get(d):
-                # merge-on-read suppression: tag with (file, pos) at
-                # the scan (before evolution transforms), anti-join
-                # this entry's deletion vectors away below
-                scan = self._with_dv_meta(scan)
-                dv_parts.append(
-                    (self._apply_evolution(scan, evo_ctx, d), d)
-                )
-            else:
-                parts.append(self._apply_evolution(scan, evo_ctx, d))
-        if dv_parts:
-            merged = reduce(
-                lambda a, b: a.unionByName(b),
-                (p for p, _ in dv_parts),
-            )
-            uuids = [u for _, d in dv_parts for u in dvm.get(d, [])]
-            merged = self._dv_suppress(
-                merged, uuids, keep_meta=with_row_ids, prefix=dv_prefix
-            )
-            if with_row_ids:
-                merged = self._attach_row_ids(
-                    merged, m_rb, [d for _, d in dv_parts]
-                )
-            parts.append(merged)
-        out_fields = [f.name for f in schema.fields]
-        if with_row_ids:
-            out_fields.append(_ROW_ID)
-        if not parts:
-            out = self.spark.createDataFrame([], schema)
-            if with_row_ids:
-                out = out.withColumn(
-                    _ROW_ID, F.lit(None).cast("bigint")
-                )
-        else:
-            out = reduce(lambda a, b: a.unionByName(b), parts)
-        # CANONICAL column order = the logical table schema (Delta
-        # parity: partition columns stay at their schema position).
-        # Without this the order would be whichever entry unioned
-        # first — path-derived partition columns land last on
-        # hive-layout entries but at schema position on post-
-        # evolution file-stored ones, so a mixed-layout table's
-        # read order would flap across compaction/DML.
-        out = out.select(*out_fields)
+            if files == []:
+                continue
+            scan_dirs.append(d)
+            if files is not None:
+                subsets[d] = files
+        # the row-id manifest is the same version, so its schema,
+        # evolution records and dv map are the lite manifest's too
+        out = self._read_dirs(
+            m_rb if with_row_ids else m,
+            scan_dirs,
+            with_row_ids=with_row_ids,
+            files=subsets,
+        )
         for w in wheres:
             if isinstance(w, In):
                 out = out.filter(F.col(w.col).isin(*w.values))
@@ -5775,17 +5687,21 @@ class SnapshotTable:
         keep_dv_meta: bool = False,
         with_row_ids: bool = False,
         rid_fresh_flag: str | None = None,
+        files: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """DataFrame over an explicit dir subset of a manifest (empty
-        subset -> empty frame with the manifest schema). Canonicalizes
-        ALTER TABLE evolution per entry (physical names -> logical,
-        defaults filled) AND applies the manifest's deletion vectors,
-        so every rewrite op reading through here MATERIALIZES the
-        logical schema + suppressions into its new files — rewritten
-        entries drop out of the evolution records and the dv map by
-        construction. ``keep_dv_meta=True`` tags EVERY row with its
-        (_DV_FILE, _DV_POS) scan position and keeps the columns — the
-        merge-on-read mutators' position source."""
+        subset -> empty frame with the manifest schema) — the one
+        builder of snapshot scans: ``read()`` prunes, then scans
+        through here. ``files`` maps an entry to its surviving files
+        (entry-relative names); an entry absent from it is read whole.
+        Canonicalizes ALTER TABLE evolution per entry (physical names
+        -> logical, defaults filled) AND applies the manifest's
+        deletion vectors, so every rewrite op reading through here
+        MATERIALIZES the logical schema + suppressions into its new
+        files — rewritten entries drop out of the evolution records
+        and the dv map by construction. ``keep_dv_meta=True`` tags
+        EVERY row with its (_DV_FILE, _DV_POS) scan position and keeps
+        the columns — the merge-on-read mutators' position source."""
         schema = StructType.fromJson(json.loads(m["schema"]))
         if not dirs:
             out = self.spark.createDataFrame([], schema)
@@ -5813,20 +5729,38 @@ class SnapshotTable:
             else None
         )
         for d in dirs:
+            # per-entry physical schema: identical to the logical
+            # schema except for entries predating a rename (see
+            # _physical_schema / ALTER TABLE)
             pschema = self._physical_schema(schema, evo_ctx, d)
             if d in mat_set:
+                # materialized entries carry the physical _row_id
+                # column; declare it so the scan reads it (reads
+                # without row ids never declare it, so it costs
+                # them nothing)
                 pschema = StructType(
                     [*pschema.fields, StructField(_ROW_ID, LongType())]
                 )
+            base = os.path.join(self.data_dir, d)
+            sub = (files or {}).get(d)
+            paths = (
+                [base] if sub is None
+                else [os.path.join(base, f) for f in sub]
+            )
             scan = (
                 self.spark.read.schema(pschema)
+                # basePath = the entry's COMMIT root, so hive partition
+                # components inside the entry path parse into columns
                 .option(
                     "basePath",
                     os.path.join(self.data_dir, self._entry_base(d)),
                 )
-                .parquet(os.path.join(self.data_dir, d))
+                .parquet(*paths)
             )
             if with_row_ids or keep_dv_meta or dvm.get(d):
+                # merge-on-read suppression and the row-id derivation
+                # both key on the (file, pos) scan position, tagged
+                # before evolution transforms
                 scan = self._with_dv_meta(scan)
                 if with_row_ids:
                     scan = (
@@ -5860,8 +5794,14 @@ class SnapshotTable:
                 )
             parts.append(merged)
         out = reduce(lambda a, b: a.unionByName(b), parts)
-        # canonical column order (see read()): rewrites materialize
-        # this frame into files, so layout stays deterministic too
+        # CANONICAL column order = the logical table schema (Delta
+        # parity: partition columns stay at their schema position).
+        # Without this the order would be whichever entry unioned
+        # first — path-derived partition columns land last on
+        # hive-layout entries but at schema position on post-
+        # evolution file-stored ones, so a mixed-layout table's order
+        # would flap across compaction/DML; rewrites materialize this
+        # frame into files, so their layout stays deterministic too.
         order = [f.name for f in schema.fields]
         if with_row_ids:
             order.append(_ROW_ID)

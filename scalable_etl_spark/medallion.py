@@ -68,12 +68,16 @@ def to_silver(bronze: DataFrame) -> DataFrame:
         bronze.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
-        .withColumn("listened_datetime", ts)
-        .withColumn("listened_date", F.to_date(ts))
-        .withColumn("year", F.year(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("day", F.dayofmonth(ts))
-        .withColumn("hour", F.hour(ts))
+        # one projection for the whole lattice: each chained
+        # withColumn would be analyzed as a plan of its own
+        .withColumns({
+            "listened_datetime": ts,
+            "listened_date": F.to_date(ts),
+            "year": F.year(ts),
+            "month": F.month(ts),
+            "day": F.dayofmonth(ts),
+            "hour": F.hour(ts),
+        })
     )
 
 

@@ -5150,3 +5150,107 @@ def test_clone_chain_and_branch_reorg_never_touch_shared_files(spark, tmp_path):
     assert digest(a) == a_before and digest(b) == b_before
     for t in (a, b):
         assert {(r.k, r.v) for r in t.read().collect()} == want
+
+
+def _data_scan_leaves(t, df) -> int:
+    """Leaves of ``df``'s optimized plan that scan ``t``'s data files
+    (deletion-vector sidecar scans are leaves too, and are left out)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        roots = leaves.apply(i).relation().location().rootPaths()
+        n += t.data_dir in roots.head().toString()
+    return n
+
+
+def test_pruned_read_matches_filtered_full_read_across_entry_kinds(
+    spark, tmp_path
+):
+    """Characterization of the snapshot scan over one table whose live
+    entries differ in every way the scan handles per entry: a
+    compacted entry with materialized row ids, entries that predate a
+    rename, hive-partitioned entries, merge-on-read deletion vectors
+    on all of them, and a clustered entry that ``where`` prunes only at
+    file level. A pruned ``read(where=...)`` returns exactly the
+    unpruned ``read()`` filtered the same way, in the same column
+    order, with and without row ids, and its plan holds one data scan
+    per surviving entry."""
+    from scalable_etl_spark.acid import In
+
+    schema = "k INT, v STRING, p STRING"
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame(
+        [(k, f"v{k}", "a") for k in range(10)], schema))
+    t.enable_row_tracking()
+    t.compact()  # one entry with physically materialized row ids
+    t.append(
+        spark.createDataFrame([(k, f"v{k}", "a") for k in range(10, 20)],
+                              schema),
+        stats_cols=["k"],
+    )
+    t.alter_rename_column("v", "w")  # the two entries above predate it
+    renamed = "k INT, w STRING, p STRING"
+    t.alter_partitioning(["p"])
+    t.append(spark.createDataFrame(
+        [(k, f"w{k}", "x" if k % 2 else "y") for k in range(20, 30)],
+        renamed))
+    t.alter_partitioning([])
+    t.append(
+        spark.createDataFrame([(k, f"w{k}", "b") for k in range(30, 60)],
+                              renamed),
+        cluster_by=["k"], n_files=3,  # per-file k ranges: 30s/40s/50s
+    )
+    t.delete("k % 7 = 0", mode="merge-on-read")
+    m = t._manifest(t.latest_version())
+    assert len(m["dirs"]) == 5
+    assert sum("/p=" in d for d in m["dirs"]) == 2
+    assert len(m["row_mat"]) == 1 and set(m["dv"]) == set(m["dirs"])
+
+    (fifties,) = [
+        f for f, per in m["file_stats"][m["dirs"][-1]].items()
+        if per["k"][0] >= 50
+    ]
+    # each predicate drops the 10..19 entry by its dir stats and the
+    # clustered entry's 50s file by its file stats; every other entry
+    # carries no stats on k and is kept
+    for where, keep in (
+        (("k", 25, 37), F.col("k").between(25, 37)),
+        (In("k", [3, 25, 36, 44]), F.col("k").isin(3, 25, 36, 44)),
+    ):
+        for rid in (False, True):
+            pruned = t.read(where=where, with_row_ids=rid)
+            full = t.read(with_row_ids=rid).filter(keep)
+            assert pruned.columns == full.columns
+            got = sorted(map(tuple, pruned.collect()))
+            assert got and got == sorted(map(tuple, full.collect()))
+            assert all(r[0] % 7 for r in got)
+            assert _data_scan_leaves(t, pruned) == len(m["dirs"]) - 1
+            assert not any(
+                f.endswith(fifties) for f in pruned.inputFiles()
+            )
+
+
+def test_uri_roots_rejected_before_any_io(spark, tmp_path, monkeypatch):
+    """Tables live on a local filesystem path only. A URI root fails at
+    construction: on s3a:// or hdfs:// the driver-side file walks see
+    nothing (a merge-on-read delete would commit as a silent no-op),
+    and a file: URI would become a relative ./file: directory."""
+    import os
+
+    import pytest
+
+    monkeypatch.chdir(tmp_path)
+    for root in (
+        "s3a://bucket/t",
+        "hdfs://namenode:8020/t",
+        f"file://{tmp_path}/t",
+        f"file:{tmp_path}/t",
+    ):
+        with pytest.raises(ValueError, match="local filesystem path"):
+            SnapshotTable(spark, root)
+    assert os.listdir(tmp_path) == []
+    # plain absolute and relative paths stay accepted
+    SnapshotTable(spark, str(tmp_path / "t")).overwrite(
+        _df(spark, [(1, "a")])
+    )
+    assert SnapshotTable(spark, "t").latest_version() == 0
